@@ -46,6 +46,7 @@ doc_id partitioning; the per-doc pubdate joins in at EVENT scale
 from __future__ import annotations
 
 import os
+import warnings
 from collections import Counter
 
 import numpy as np
@@ -136,15 +137,6 @@ def _ref_minmax(m: np.ndarray) -> np.ndarray:
     if hi == 0.0:
         return np.zeros_like(m)
     return (m - 100.0) / (hi - 100.0)
-
-
-def _minmax(m: np.ndarray) -> np.ndarray:
-    """Clean min-max (kept for callers/tests that want the intended
-    reading; cluster_events itself uses _ref_minmax for parity)."""
-    lo, hi = m.min(), m.max()
-    if hi <= lo:
-        return np.zeros_like(m)
-    return (m - lo) / (hi - lo)
 
 
 def average_linkage_clusters(dist: np.ndarray, threshold: float) -> list[int]:
@@ -306,28 +298,29 @@ def trained_distance(m: dict[str, np.ndarray], tw) -> np.ndarray:
     return dist
 
 
-_COREF_CACHE: dict[str, tuple | None] = {}
+def _weights_from_arrays(arrays):
+    return (arrays["w"].astype(np.float64), float(arrays["b"]),
+            arrays["mu"].astype(np.float64), arrays["sd"].astype(np.float64),
+            float(arrays["thr"]))
 
 
 def load_coref_weights(path: str | None = None):
     """(w, b, mu, sd, threshold) or None when no artifact.  Cached per
-    (process, path); absence is NOT pinned (matching load_begin_weights
-    — a probe before training must not mask a later save)."""
-    from ..deploy import resolve_artifact
+    (process, path) by heads.load; absence is NOT pinned (a probe
+    before training must not mask a later save).  An artifact of the
+    wrong width (an older feature set) also gives None, with a warning
+    naming it."""
+    from .heads import load
 
-    p = resolve_artifact(path or COREF_ARTIFACT)
-    if p in _COREF_CACHE:
-        return _COREF_CACHE[p]
-    if not os.path.exists(p):
+    p = path or COREF_ARTIFACT
+    w = load(p, _weights_from_arrays)
+    if w is not None and len(w[0]) != len(COREF_PAIR_FEATURES):
+        warnings.warn(
+            f"stale coref artifact {p}: w width {len(w[0])}, expected "
+            f"{len(COREF_PAIR_FEATURES)}; retrain with python -m "
+            "casie_spark.operators.train_coref", stacklevel=2)
         return None
-    z = np.load(p, allow_pickle=False)
-    if z["w"].shape[0] != len(COREF_PAIR_FEATURES):
-        return None  # stale artifact from an older feature set
-    out = (z["w"].astype(np.float64), float(z["b"]),
-           z["mu"].astype(np.float64), z["sd"].astype(np.float64),
-           float(z["thr"]))
-    _COREF_CACHE[p] = out
-    return out
+    return w
 
 
 def _make_cluster_doc(trained):

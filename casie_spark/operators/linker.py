@@ -57,6 +57,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import warnings
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -276,30 +277,25 @@ def candidate_frame(events: DataFrame, args: DataFrame,
     )
 
 
-_LINKER_CACHE: dict[str, tuple | None] = {}
-
-
 def load_linker_weights(path: str | None = None):
     """(w_base, w_pair, lex_trig, lex_arg) or None when no artifact.
-    Cached per (process, path); absence is NOT pinned (matching
-    load_begin_weights — a probe before training must not mask the
-    artifact save_artifact writes later)."""
-    from ..deploy import resolve_artifact
+    Cached per (process, path) by heads.load; absence is NOT pinned (a
+    probe before training must not mask the artifact a later save
+    writes).  An artifact of the wrong width (an older feature set)
+    also gives None — the caller falls back to the rule cascade
+    rather than crash mid-pipeline — with a warning naming it."""
+    from .heads import load
+    from .train_linker import arrays_to_weights
 
-    p = resolve_artifact(path or LINKER_ARTIFACT)
-    if p in _LINKER_CACHE:
-        return _LINKER_CACHE[p]
-    if not os.path.exists(p):
+    p = path or LINKER_ARTIFACT
+    w = load(p, arrays_to_weights)
+    if w is not None and len(w[0]) != N_BASE:
+        warnings.warn(
+            f"stale linker artifact {p}: w_base width {len(w[0])}, "
+            f"expected {N_BASE}; retrain with python -m "
+            "casie_spark.operators.train_linker", stacklevel=2)
         return None
-    z = np.load(p, allow_pickle=False)
-    if z["w_base"].shape[0] != N_BASE:
-        # stale artifact from an older feature set — fall back to the
-        # rule cascade rather than crash mid-pipeline
-        return None
-    out = (z["w_base"].astype(np.float64), z["w_pair"].astype(np.float64),
-           z["lex_trig"].astype(np.float64), z["lex_arg"].astype(np.float64))
-    _LINKER_CACHE[p] = out
-    return out
+    return w
 
 
 def with_score_jvm(cand: DataFrame, weights) -> DataFrame:

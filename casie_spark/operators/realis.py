@@ -113,33 +113,15 @@ def classify_realis_rules(ctx_df: DataFrame, events: DataFrame) -> DataFrame:
     )
 
 
-_REALIS_WEIGHTS: dict = {}
-
-
 def load_realis_weights(path: str | None = None):
     """(tables, labels) from the trained realis artifact
     (operators/train_realis.py), or None when absent.  Cached per
-    (process, path) like load_role_weights — an absent artifact is NOT
-    pinned, so a later save_artifact is picked up."""
-    import os
+    (process, path) by heads.load — an absent artifact is NOT pinned,
+    so a later save is picked up."""
+    from .heads import load
+    from .train_realis import REALIS_ARTIFACT, arrays_to_weights
 
-    import numpy as np
-
-    from ..deploy import resolve_artifact
-    from .train_realis import REALIS_ARTIFACT
-
-    p = resolve_artifact(path or REALIS_ARTIFACT)
-    if p in _REALIS_WEIGHTS:
-        return _REALIS_WEIGHTS[p]
-    if not os.path.exists(p):
-        return None
-    z = np.load(p, allow_pickle=False)
-    tables = {k[7:]: z[k].astype(np.float32)
-              for k in z.files if k.startswith("realis_")
-              and k != "realis_labels"}
-    labels = [str(s) for s in z["realis_labels"]]
-    _REALIS_WEIGHTS[p] = (tables, labels)
-    return _REALIS_WEIGHTS[p]
+    return load(path or REALIS_ARTIFACT, arrays_to_weights)
 
 
 def trained_realis_provider(weights=None):
@@ -158,12 +140,13 @@ def trained_realis_provider(weights=None):
 
         @pandas_udf("string")
         def predict(txt: pd.Series, ctx: pd.Series) -> pd.Series:
-            from .train_realis import _logits, realis_features
+            from .heads import logits
+            from .train_realis import _KEYS, realis_features
 
             tables, labels = bc.value
-            trig, widx, wsamp = realis_features(txt.tolist(), ctx.tolist())
+            f = realis_features(txt.tolist(), ctx.tolist())
             out = np.array(labels, dtype=object)[
-                _logits(tables, trig, widx, wsamp, len(txt)).argmax(axis=1)]
+                logits(tables, f, _KEYS).argmax(axis=1)]
             return pd.Series(out)
 
         return df.select(

@@ -47,32 +47,14 @@ def role_lookup_df(spark: SparkSession) -> DataFrame:
     )
 
 
-# keyed by path (ADVICE r2: a single-slot cache pinned the first result)
-_ROLE_WEIGHTS: dict[str, tuple] = {}
-
-
 def load_role_weights(path: str | None = None):
     """(tables, labels) from the trained role-phrase artifact
     (operators/train_roles.py), or None when absent.  Cached per
-    (process, path); the provider broadcasts it."""
-    import os
+    (process, path) by heads.load; the provider broadcasts it."""
+    from .heads import load
+    from .train_roles import ROLE_ARTIFACT, arrays_to_weights
 
-    import numpy as np
-
-    from ..deploy import resolve_artifact
-    from .train_roles import ROLE_ARTIFACT
-
-    p = resolve_artifact(path or ROLE_ARTIFACT)
-    if p in _ROLE_WEIGHTS:
-        return _ROLE_WEIGHTS[p]
-    if not os.path.exists(p):
-        return None
-    z = np.load(p, allow_pickle=False)
-    tables = {k[5:]: z[k].astype(np.float32)
-              for k in z.files if k.startswith("role_") and k != "role_labels"}
-    labels = [str(s) for s in z["role_labels"]]
-    _ROLE_WEIGHTS[p] = (tables, labels)
-    return _ROLE_WEIGHTS[p]
+    return load(path or ROLE_ARTIFACT, arrays_to_weights)
 
 
 def trained_role_provider(weights=None):
@@ -93,11 +75,13 @@ def trained_role_provider(weights=None):
         @pandas_udf("string")
         def predict(sub: pd.Series, at: pd.Series,
                     txt: pd.Series) -> pd.Series:
-            from .train_roles import _logits, role_features
+            from .heads import logits
+            from .train_roles import _KEYS, role_features
 
             tables, labels = bc.value
             f = role_features(sub.tolist(), at.tolist(), txt.tolist())
-            out = np.array(labels, dtype=object)[_logits(tables, f).argmax(1)]
+            out = np.array(labels, dtype=object)[
+                logits(tables, f, _KEYS).argmax(1)]
             return pd.Series(out)
 
         return cand.select(

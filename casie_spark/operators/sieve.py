@@ -220,13 +220,6 @@ def sieve_chains(mentions: list[tuple[int, int, str, str]]) -> list[int]:
     return out
 
 
-def pack_mention(sent_id, begin, text, arg_type) -> str:
-    """One mention -> packed field string (coref_inputs aggregates
-    these per event; sieve_from_packed parses them back)."""
-    return FIELD_SEP.join(
-        (str(int(sent_id)), str(int(begin)), str(text), str(arg_type)))
-
-
 def parse_mentions(packed: str) -> list[tuple[int, int, str, str]]:
     """Packed per-event mention string -> mention tuples."""
     if not packed:

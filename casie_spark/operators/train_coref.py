@@ -32,8 +32,6 @@ Run: python -m casie_spark.operators.train_coref
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -47,6 +45,7 @@ from .coref import (
     pair_matrices,
     trained_distance,
 )
+from .heads import save
 from .train_tagger import doc_fold
 
 THR_GRID = np.round(np.arange(0.02, 0.99, 0.01), 2)
@@ -357,12 +356,6 @@ def cross_validate(groups: list[dict], X, y, fold, n_folds: int = 5) -> dict:
     }
 
 
-def save_artifact(arrays, path: str = COREF_ARTIFACT) -> str:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    np.savez_compressed(path, **arrays)
-    return path
-
-
 def main() -> None:  # pragma: no cover - CLI entry
     from ..session import get_spark
 
@@ -406,10 +399,10 @@ def main() -> None:  # pragma: no cover - CLI entry
     thr, fit_f1 = select_threshold(groups, model)
     print(f"\nfull-fit deployment threshold {thr:.2f}"
           f" (train-regime pairwise F1 {fit_f1:.3f})")
-    path = save_artifact({
+    path = save({
         "w": w, "b": np.float64(b), "mu": mu, "sd": sd,
         "thr": np.float64(thr),
-    })
+    }, COREF_ARTIFACT)
     print(f"saved {path}")
     spark.stop()
 

@@ -29,6 +29,7 @@ import os
 
 import numpy as np
 
+from .heads import save
 from .linker import (
     LEXDIM,
     LINKER_ARTIFACT,
@@ -222,18 +223,13 @@ def pick_accuracy(pools, arrays) -> dict:
 
 
 def arrays_to_weights(arrays):
-    """train() arrays -> the (w_base, w_pair, lex_trig, lex_arg) tuple
-    linker.link_trained consumes (same shape as load_linker_weights)."""
+    """Artifact arrays -> the (w_base, w_pair, lex_trig, lex_arg) tuple
+    linker.link_trained consumes (linker.load_linker_weights parses
+    the committed artifact with it)."""
     return (arrays["w_base"].astype(np.float64),
             arrays["w_pair"].astype(np.float64),
             arrays["lex_trig"].astype(np.float64),
             arrays["lex_arg"].astype(np.float64))
-
-
-def save_artifact(arrays, path: str = LINKER_ARTIFACT) -> str:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    np.savez_compressed(path, **arrays)
-    return path
 
 
 def main() -> None:  # pragma: no cover - CLI entry
@@ -248,7 +244,7 @@ def main() -> None:  # pragma: no cover - CLI entry
     acc = pick_accuracy(pools, arrays)
     print(f"pick accuracy: multi {acc['multi_acc']:.3f} "
           f"({acc['n_multi']} pools), all {acc['all_acc']:.3f}")
-    path = save_artifact(arrays)
+    path = save(arrays, LINKER_ARTIFACT)
     print(f"wrote {path} ({os.path.getsize(path) / 1e3:.0f} KB)")
 
     # end-to-end triple quality with the trained linker
@@ -257,9 +253,7 @@ def main() -> None:  # pragma: no cover - CLI entry
     from ..pipeline import run_pipeline
     from ..scoring import triple_prf
     from ..sources.annotations import gold_triples, load_annotations
-    from . import linker
 
-    linker._LINKER_CACHE.clear()
     ann = load_annotations(spark).cache()
     docs = ann.select("doc_id", F.col("content").alias("text"))
     pred = run_pipeline(docs, id_col="doc_id", mode="model")

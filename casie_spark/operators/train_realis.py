@@ -5,8 +5,9 @@ build_model :116-157, over the ±7-token W2 context windows that
 recovered from the gold corpus like the tagger and role models.
 
 Model: logits = T_trig[hash(trigger head)] + Σ_{w in ctx} T_ctx[hash(w)]
-+ bias — a bag-of-context linear scorer trained with the mini-batch
-averaged perceptron (fixed seed/schedule, bit-reproducible artifact).
++ bias — a bag-of-context linear scorer trained with the shared
+mini-batch averaged perceptron (heads.py; fixed seed/schedule,
+bit-reproducible artifact).
 The cue-rule provider scores 0.628 on the corpus against a 0.619
 majority baseline; the trained head separates Generic/Other cues the
 hand list misses.
@@ -21,6 +22,7 @@ import os
 
 import numpy as np
 
+from .heads import logits, save, train_averaged_perceptron, unpack
 from .model_tagger import VOCAB_SIZE, token_id
 
 REALIS_ARTIFACT = os.path.join(
@@ -28,79 +30,27 @@ REALIS_ARTIFACT = os.path.join(
     "artifacts", "realis_weights.npz",
 )
 SEED = 20260819
-EPOCHS = 24
-BATCH = 256
-AVG_FROM = 20
+_KEYS = ("trig", "ctx")
 
 
-def realis_features(texts: list, ctxs: list
-                    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(trigger head ids, flattened ctx word ids, ctx sample index)."""
+def realis_features(texts: list, ctxs: list) -> dict[str, np.ndarray]:
+    """Shared train/inference featurizer: the trigger head id, and the
+    context words as a PAD=0 ``(n, G)`` bag (token ids are never 0)."""
     n = len(texts)
     trig = np.fromiter(
         (token_id(str(t).split()[-1]) if str(t).split() else 0
          for t in texts),
         dtype=np.int64, count=n)
-    widx, wsamp = [], []
-    for i, ctx in enumerate(ctxs):
-        if ctx is None:
-            continue
-        for w in ctx:
-            widx.append(token_id(str(w)))
-            wsamp.append(i)
-    return trig, np.asarray(widx, np.int64), np.asarray(wsamp, np.int64)
-
-
-def _logits(tables: dict[str, np.ndarray], trig: np.ndarray,
-            widx: np.ndarray, wsamp: np.ndarray, n: int) -> np.ndarray:
-    out = tables["b"][None, :].astype(np.float32).repeat(n, axis=0)
-    out += tables["trig"][trig]
-    if len(widx):
-        np.add.at(out, wsamp, tables["ctx"][widx])
-    return out
-
-
-def train_realis_head(trig, widx, wsamp, y, n_labels
-                      ) -> dict[str, np.ndarray]:
-    rng = np.random.default_rng(SEED)
-    shapes = {"trig": (VOCAB_SIZE, n_labels), "ctx": (VOCAB_SIZE, n_labels),
-              "b": (n_labels,)}
-    tables = {k: np.zeros(s, np.float32) for k, s in shapes.items()}
-    avg = {k: np.zeros(s, np.float64) for k, s in shapes.items()}
-    n = len(y)
-    # per-sample context slices for the update step
-    order_w = np.argsort(wsamp, kind="stable")
-    widx_s, wsamp_s = widx[order_w], wsamp[order_w]
-    starts = np.searchsorted(wsamp_s, np.arange(n))
-    ends = np.searchsorted(wsamp_s, np.arange(n) + 1)
-    navg = 0
-    for ep in range(EPOCHS):
-        order = rng.permutation(n)
-        for s in range(0, n, BATCH):
-            idx = order[s:s + BATCH]
-            logits = tables["b"][None, :].repeat(len(idx), axis=0)
-            logits += tables["trig"][trig[idx]]
-            for j, i in enumerate(idx):
-                ws = widx_s[starts[i]:ends[i]]
-                if len(ws):
-                    logits[j] += tables["ctx"][ws].sum(axis=0)
-            pred = logits.argmax(axis=1)
-            for j, i in enumerate(idx):
-                if pred[j] == y[i]:
-                    continue
-                tables["trig"][trig[i], y[i]] += 1.0
-                tables["trig"][trig[i], pred[j]] -= 1.0
-                tables["b"][y[i]] += 1.0
-                tables["b"][pred[j]] -= 1.0
-                ws = widx_s[starts[i]:ends[i]]
-                if len(ws):
-                    np.add.at(tables["ctx"], (ws, y[i]), 1.0)
-                    np.add.at(tables["ctx"], (ws, pred[j]), -1.0)
-        if ep >= AVG_FROM:
-            for k in tables:
-                avg[k] += tables[k]
-            navg += 1
-    return {k: (avg[k] / max(navg, 1)).astype(np.float32) for k in tables}
+    lens = np.fromiter((0 if c is None else len(c) for c in ctxs),
+                       dtype=np.int64, count=n)
+    words = np.fromiter(
+        (token_id(str(w)) for c in ctxs if c is not None for w in c),
+        dtype=np.int64, count=int(lens.sum()))
+    row = np.repeat(np.arange(n), lens)
+    col = np.arange(len(words)) - np.repeat(np.cumsum(lens) - lens, lens)
+    ctx = np.zeros((n, lens.max(initial=0)), np.int64)
+    ctx[row, col] = words
+    return {"trig": trig, "ctx": ctx}
 
 
 def build_training_frame(spark, doc_ids=None):
@@ -142,30 +92,22 @@ def build_training_frame(spark, doc_ids=None):
 def train(pdf) -> dict[str, np.ndarray]:
     labels = sorted(pdf["realis"].unique())
     lid = {r: i for i, r in enumerate(labels)}
-    trig, widx, wsamp = realis_features(
-        pdf["text"].tolist(), pdf["ctx"].tolist())
+    f = realis_features(pdf["text"].tolist(), pdf["ctx"].tolist())
     y = pdf["realis"].map(lid).to_numpy(np.int64)
-    tables = train_realis_head(trig, widx, wsamp, y, len(labels))
+    n = len(labels)
+    shapes = {"trig": (VOCAB_SIZE, n), "ctx": (VOCAB_SIZE, n), "b": (n,)}
+    tables = train_averaged_perceptron(shapes, f, y, SEED, 0.0)
     out = {f"realis_{k}": v.astype(np.float16) for k, v in tables.items()}
     out["realis_labels"] = np.array(labels)
     return out
 
 
 def arrays_to_weights(arrays):
-    """train() arrays -> the (tables, labels) tuple
-    realis.trained_realis_provider consumes (same shape as
-    realis.load_realis_weights returns from the committed artifact)."""
-    tables = {k[7:]: arrays[k].astype(np.float32)
-              for k in arrays if k.startswith("realis_")
-              and k != "realis_labels"}
-    labels = [str(s) for s in arrays["realis_labels"]]
-    return tables, labels
-
-
-def save_artifact(arrays, path: str = REALIS_ARTIFACT) -> str:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    np.savez_compressed(path, **arrays)
-    return path
+    """Artifact arrays -> the (tables, labels) tuple
+    realis.trained_realis_provider consumes (realis.load_realis_weights
+    parses the committed artifact with it)."""
+    return (unpack(arrays, "realis"),
+            [str(s) for s in arrays["realis_labels"]])
 
 
 def main() -> None:  # pragma: no cover - CLI entry
@@ -176,15 +118,12 @@ def main() -> None:  # pragma: no cover - CLI entry
     pdf = build_training_frame(spark)
     print(f"training rows: {len(pdf)}")
     arrays = train(pdf)
-    path = save_artifact(arrays)
+    path = save(arrays, REALIS_ARTIFACT)
     print(f"wrote {path} ({os.path.getsize(path) / 1e6:.1f} MB)")
-    tables = {k[7:]: arrays[k].astype(np.float32)
-              for k in arrays if k.startswith("realis_") and k != "realis_labels"}
-    labels = [str(s) for s in arrays["realis_labels"]]
-    trig, widx, wsamp = realis_features(
-        pdf["text"].tolist(), pdf["ctx"].tolist())
+    tables, labels = arrays_to_weights(arrays)
+    f = realis_features(pdf["text"].tolist(), pdf["ctx"].tolist())
     pred = np.array(labels, dtype=object)[
-        _logits(tables, trig, widx, wsamp, len(pdf)).argmax(axis=1)]
+        logits(tables, f, _KEYS).argmax(axis=1)]
     gold = pdf["realis"].to_numpy()
     print(f"realis accuracy: trained={(pred == gold).mean():.3f} "
           f"majority={(gold == 'Actual').mean():.3f} (rules: 0.628)")

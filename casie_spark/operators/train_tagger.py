@@ -40,8 +40,9 @@ import os
 
 import numpy as np
 
-from .. import config
+from .heads import logits, save, train_averaged_perceptron
 from .model_tagger import (
+    _GATHER_KEYS,
     ARTIFACT_PATH,
     BIGRAM_SIZE,
     CNG_SIZE,
@@ -51,15 +52,14 @@ from .model_tagger import (
     TRIGRAM_SIZE,
     VOCAB_SIZE,
     feature_arrays,
+    weights_from_arrays,
 )
 
 SEED = 20260817
-EPOCHS = 24
-BATCH = 256          # small batches: less mini-batch staleness, more
-                     # mistake-driven steps -> near-ceiling train fit
-AVG_FROM = 20        # average the last epochs only (early epochs are
-                     # still far from the solution and dilute the mean)
 CLASS_WEIGHT_POW = 0.15
+# token-identity tables silenced when word dropout drops the example's
+# current token (they all contain the current token's surface)
+LEX_KEYS = ("t0", "s0", "b1", "b2", "tri")
 TRANS_SMOOTH = 0.5   # add-k smoothing for the label-bigram counts
 # Candidate scales for the transition term (0 = per-token argmax); the
 # trainer picks one per head against the real pipeline metric.  A
@@ -108,25 +108,14 @@ def build_training_frame(spark):
 def _train_head(f: dict[str, np.ndarray], y: np.ndarray, n_labels: int,
                 seed: int, drop_keys: tuple = (),
                 word_dropout: float = 0.0) -> dict[str, np.ndarray]:
-    """Mini-batch AVERAGED PERCEPTRON over the summed-gather linear
-    model: on each mistake, +w at the gold label row and -w at the
-    predicted one, per feature table (w = inverse-class-frequency^0.15,
-    the A1 class-frequency -> class-weights computation, reference
-    role_phrase.py:270-281 — so the ~30:1 O class cannot drown the
-    trigger/argument classes).
-    Mistake-driven updates reach high accuracy on the near-separable
-    memorization objective where plain SGD under-trains; per-epoch
-    weight averaging gives the usual stability.  Deterministic: fixed
-    seed, fixed epoch/batch schedule.
-
-    ``word_dropout``: probability per (example, epoch) of treating the
-    CURRENT token as unseen — its identity features (t0/s0/b1/b2/tri)
-    contribute nothing and receive no update for that example, so the
-    score must come from shape/affix/word-class rows.  This simulates
-    the held-out regime at train time (word dropout, Iyyer et al.
-    2015); without it the memorization features fix every training
-    mistake first and the generalizing rows are starved."""
-    rng = np.random.default_rng(seed)
+    """The tagger head spec for heads.train_averaged_perceptron: one
+    table per feature key present in ``f`` (minus ``drop_keys``),
+    class weights = inverse-class-frequency^0.15 (so the ~30:1 O class
+    cannot drown the trigger/argument classes), and ``word_dropout``
+    over the token-identity tables (LEX_KEYS) — it simulates the
+    held-out regime at train time; without it the memorization
+    features fix every training mistake first and the generalizing
+    rows are starved."""
     shapes = {
         "t0": (VOCAB_SIZE, n_labels), "s0": (VOCAB_SIZE, n_labels),
         "tm1": (VOCAB_SIZE, n_labels), "tp1": (VOCAB_SIZE, n_labels),
@@ -154,61 +143,8 @@ def _train_head(f: dict[str, np.ndarray], y: np.ndarray, n_labels: int,
         shapes["sev"] = (2, n_labels)
     for k in drop_keys:
         shapes.pop(k, None)
-    tables = {k: np.zeros(s, np.float32) for k, s in shapes.items()}
-    avg = {k: np.zeros(s, np.float64) for k, s in shapes.items()}
-    n = len(y)
-    counts = np.bincount(y, minlength=n_labels).astype(np.float64)
-    cw = (n / np.maximum(counts, 1.0)) ** CLASS_WEIGHT_POW
-    cw = (cw / cw[0]).astype(np.float32)  # O has weight 1
-
-    gather = tuple(k for k in shapes if k != "b")
-    # token-identity features silenced when the example's current
-    # token is dropped (they all contain the current token's surface)
-    lex = tuple(k for k in gather if k in ("t0", "s0", "b1", "b2", "tri"))
-    navg = 0
-    for ep in range(EPOCHS):
-        order = rng.permutation(n)
-        dropped = (rng.random(n) < word_dropout) if word_dropout > 0 \
-            else np.zeros(n, dtype=bool)
-        for s in range(0, n, BATCH):
-            idx = order[s:s + BATCH]
-            keep = ~dropped[idx]
-            logits = tables["b"][None, :].repeat(len(idx), axis=0)
-            for k in gather:
-                if f[k].ndim == 2:  # bag feature: sum the gathered rows
-                    logits += tables[k][f[k][idx]].sum(axis=1)
-                elif k in lex and word_dropout > 0:
-                    logits += tables[k][f[k][idx]] * keep[:, None]
-                else:
-                    logits += tables[k][f[k][idx]]
-            pred = logits.argmax(axis=1)
-            mist = pred != y[idx]
-            if mist.any():
-                mi = idx[mist]
-                pm = pred[mist]
-                wts = cw[y[mi]]
-                mkeep = keep[mist]
-                for k in gather:
-                    if f[k].ndim == 2:
-                        ids = f[k][mi]                  # (m, G) with PAD=0
-                        wb = wts[:, None] * (ids != 0)  # PAD rows get 0
-                        np.add.at(tables[k], (ids, y[mi][:, None]), wb)
-                        np.add.at(tables[k], (ids, pm[:, None]), -wb)
-                    elif k in lex and word_dropout > 0:
-                        mk, yk, pk, wk = (mi[mkeep], y[mi][mkeep],
-                                          pm[mkeep], wts[mkeep])
-                        np.add.at(tables[k], (f[k][mk], yk), wk)
-                        np.add.at(tables[k], (f[k][mk], pk), -wk)
-                    else:
-                        np.add.at(tables[k], (f[k][mi], y[mi]), wts)
-                        np.add.at(tables[k], (f[k][mi], pm), -wts)
-                np.add.at(tables["b"], y[mi], wts)
-                np.add.at(tables["b"], pm, -wts)
-        if ep >= AVG_FROM:
-            for k in tables:
-                avg[k] += tables[k]
-            navg += 1
-    return {k: (avg[k] / max(navg, 1)).astype(np.float32) for k in tables}
+    return train_averaged_perceptron(shapes, f, y, seed, CLASS_WEIGHT_POW,
+                                     word_dropout=word_dropout, lex=LEX_KEYS)
 
 
 def fit_transitions(y: np.ndarray, starts: np.ndarray, n_labels: int,
@@ -265,11 +201,7 @@ def _cross_fit_flags(pdf, f, yt, n_folds: int = 5,
     the cascade it will actually see).  Doc-level md5 subfolds; each
     fold is decoded by a head + fixed-λ transitions fit on the other
     folds.  Deterministic.  Returns int64 0/1 per row."""
-    from .model_tagger import (
-        _ctx_logits,
-        sentence_flag_ids,
-        viterbi_segments,
-    )
+    from .model_tagger import sentence_flag_ids, viterbi_segments
 
     folds = pdf["doc_id"].map(lambda d: doc_fold(d, n_folds)).to_numpy()
     n = len(pdf)
@@ -295,8 +227,8 @@ def _cross_fit_flags(pdf, f, yt, n_folds: int = 5,
         sc = _scaled(fit_transitions(yt[tr], starts_tr,
                                      len(TRIGGER_LABELS)), lam)
         fte = {kk: v[te] for kk, v in f.items()}
-        path = viterbi_segments(_ctx_logits(tables, fte), starts_te,
-                                sc["trans"], sc["start"])
+        path = viterbi_segments(logits(tables, fte, _GATHER_KEYS),
+                                starts_te, sc["trans"], sc["start"])
         flags[te] = sentence_flag_ids(path, starts_te, len(path))
     return flags
 
@@ -391,26 +323,6 @@ def raw_transitions(pdf) -> dict[str, tuple[np.ndarray, np.ndarray]]:
     }
 
 
-def weights_from_arrays(arrays: dict[str, np.ndarray],
-                        trig_trans=None, arg_trans=None):
-    """In-memory TaggerWeights from artifact arrays (mirrors
-    model_tagger.load_weights without the file round-trip)."""
-    from .model_tagger import _CTX_KEYS, TaggerWeights
-
-    return TaggerWeights(
-        w_trigger=np.zeros((VOCAB_SIZE, len(TRIGGER_LABELS)), np.float32),
-        w_arg=np.zeros((VOCAB_SIZE, len(GOLD_ARG_LABELS)), np.float32),
-        trigger_labels=[str(s) for s in arrays["trigger_labels"]],
-        arg_labels=[str(s) for s in arrays["arg_labels"]],
-        trig_ctx={k: arrays[f"trig_{k}"].astype(np.float32)
-                  for k in _CTX_KEYS if f"trig_{k}" in arrays},
-        arg_ctx={k: arrays[f"arg_{k}"].astype(np.float32)
-                 for k in _CTX_KEYS if f"arg_{k}" in arrays},
-        trig_trans=trig_trans,
-        arg_trans=arg_trans,
-    )
-
-
 def select_transition_scale(spark, arrays, raw) -> dict[str, float]:
     """Deterministic JOINT λ choice: run the REAL pipeline metric
     (evaluate, mode=model) once per grid value with λ·(trans, start)
@@ -457,13 +369,6 @@ def _scaled(raw_pair, lam: float):
     trans, start = raw_pair
     return {"trans": (trans * lam).astype(np.float32),
             "start": (start * lam).astype(np.float32)}
-
-
-def save_artifact(arrays: dict[str, np.ndarray],
-                  path: str = ARTIFACT_PATH) -> str:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    np.savez_compressed(path, **arrays)
-    return path
 
 
 def evaluate(spark, mode: str = "model", tagger_weights=None,
@@ -659,12 +564,8 @@ def main(cng_heads: tuple = ()) -> None:  # pragma: no cover - CLI entry
         if sc is not None:
             arrays[f"{head}_trans"] = sc["trans"]
             arrays[f"{head}_start"] = sc["start"]
-    path = save_artifact(arrays)
+    path = save(arrays, ARTIFACT_PATH)
     print(f"wrote {path} ({os.path.getsize(path) / 1e6:.1f} MB)")
-    # force a reload so evaluate() sees the new artifact
-    from . import model_tagger
-
-    model_tagger.invalidate_weight_cache()
     print("model:", evaluate(spark, "model"))
     print("rules:", evaluate(spark, "rules"))
     spark.stop()

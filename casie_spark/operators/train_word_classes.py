@@ -32,7 +32,8 @@ import os
 
 import numpy as np
 
-from .word_classes import ARTIFACT, kmeans
+from .heads import save
+from .word_classes import ARTIFACT, from_arrays, kmeans
 
 SEED = 20260817
 MIN_COUNT = 3       # vocabulary floor over the combined corpus
@@ -141,13 +142,6 @@ def fit(sents: list[list[str]]) -> dict[str, np.ndarray]:
     }
 
 
-def save_artifact(arrays: dict[str, np.ndarray],
-                  path: str = ARTIFACT) -> str:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    np.savez_compressed(path, **arrays)
-    return path
-
-
 def main() -> None:  # pragma: no cover - CLI entry
     from ..session import get_spark
 
@@ -156,15 +150,11 @@ def main() -> None:  # pragma: no cover - CLI entry
     sents = corpus_sentences(spark)
     spark.stop()
     arrays = fit(sents)
-    path = save_artifact(arrays)
+    path = save(arrays, ARTIFACT)
     print(f"wrote {path} ({os.path.getsize(path) / 1e6:.1f} MB)")
 
     # neighbor sanity probe on security vocabulary
-    from .word_classes import WordClasses, invalidate_cache
-
-    wc = WordClasses(
-        vocab=[str(w) for w in arrays["vocab"]], vecs=arrays["vecs"],
-        cls_fine=arrays["cls_fine"], cls_coarse=arrays["cls_coarse"])
+    wc = from_arrays(arrays)
     for probe in ("stole", "ransomware", "vulnerability", "patched",
                   "phishing", "microsoft"):
         i = wc.row(probe)
@@ -175,7 +165,6 @@ def main() -> None:  # pragma: no cover - CLI entry
         near = np.argsort(-sims)[1:7]
         print(f"  {probe}: " + ", ".join(
             f"{wc.vocab[j]}({sims[j]:.2f})" for j in near))
-    invalidate_cache()
 
 
 if __name__ == "__main__":

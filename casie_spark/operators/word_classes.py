@@ -109,35 +109,23 @@ class WordClasses:
         return float(va @ vb)
 
 
-_CACHE: dict[str, WordClasses | None] = {}
+def from_arrays(arrays) -> WordClasses:
+    """Artifact arrays (train_word_classes.fit) -> WordClasses."""
+    return WordClasses(
+        vocab=[str(w) for w in arrays["vocab"]],
+        vecs=arrays["vecs"].astype(np.float32),
+        cls_fine=arrays["cls_fine"].astype(np.int32),
+        cls_coarse=arrays["cls_coarse"].astype(np.int32),
+    )
 
 
 def load_word_classes(path: str | None = None) -> WordClasses | None:
     """Committed artifact or None when absent.  Cached per (process,
-    path); absence is not pinned (a later training run must be seen)."""
-    from ..deploy import resolve_artifact
+    path) by heads.load; absence is not pinned (a later training run
+    must be seen)."""
+    from .heads import load
 
-    p = resolve_artifact(path or ARTIFACT)
-    if p in _CACHE:
-        return _CACHE[p]
-    if not os.path.exists(p):
-        return None
-    z = np.load(p, allow_pickle=False)
-    wc = WordClasses(
-        vocab=[str(w) for w in z["vocab"]],
-        vecs=z["vecs"].astype(np.float32),
-        cls_fine=z["cls_fine"].astype(np.int32),
-        cls_coarse=z["cls_coarse"].astype(np.int32),
-    )
-    _CACHE[p] = wc
-    return wc
-
-
-def invalidate_cache(path: str | None = None) -> None:
-    if path is None:
-        _CACHE.clear()
-    else:
-        _CACHE.pop(path, None)
+    return load(path or ARTIFACT, from_arrays)
 
 
 def kmeans(vecs: np.ndarray, k: int, seed: int, iters: int = 40) -> np.ndarray:

@@ -64,3 +64,18 @@ def test_random_differential_multiple_bucket_widths(spark):
     want = _naive(points, intervals)
     for b in (64, 100, 1000):
         assert _run(spark, points, intervals, b) == want, b
+
+
+def test_descending_interval_has_no_fanout(spark):
+    """An interval with end <= start contains no point.  A far-descending
+    one must be dropped before the bucket explode: sequence() would
+    otherwise count its buckets down from start to end (here 10^10 of
+    them, past Spark's array size limit)."""
+    intervals = [
+        (1, 10, 100, 300),
+        (1, 11, 10 ** 12, 0),   # far-descending
+        (1, 12, 250, 250),      # empty
+    ]
+    points = [(1, 1, 150), (2, 1, 250), (3, 1, 5 * 10 ** 11)]
+    want = _naive(points, intervals)
+    assert _run(spark, points, intervals, 100) == want == {(1, 10), (2, 10)}
